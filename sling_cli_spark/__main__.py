@@ -272,14 +272,10 @@ def cmd_run(args: argparse.Namespace) -> int:
 
             empty = db_source_is_empty(spark, cfg.source)
         else:
-            from sling_cli_spark.sinks.db_load import (
-                dbsrc_stage_mark, release_db_source_stages)
+            from sling_cli_spark.sinks.db_load import db_source_stages
 
-            mark = dbsrc_stage_mark()
-            try:
+            with db_source_stages():
                 empty = build_read_plan(spark, cfg).isEmpty()
-            finally:
-                release_db_source_stages(mark)
         if empty:
             print("no data or records found in stream. Nothing to do. "
                   "To allow empty loads, set SLING_ALLOW_EMPTY=TRUE",

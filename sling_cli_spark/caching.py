@@ -22,6 +22,8 @@ Operators whose persist IS scoped in-function (runner.py merge paths,
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
@@ -31,9 +33,12 @@ from pyspark.storagelevel import StorageLevel
 # unpersists to make room, so even a release-free session can never
 # accrete more than _MAX_TRACKED operator caches. Each entry is an
 # operator-internal SLIM frame (ids + hashes/counts), never the corpus
-# text.
+# text. _LOCK guards the check-then-pop on _TRACKED: operators run on
+# several threads at once (concurrent replication streams, pipeline
+# groups), and an unguarded pop raced an emptied list.
 _TRACKED: list[DataFrame] = []
 _MAX_TRACKED = 64
+_LOCK = threading.Lock()
 
 
 def persist_tracked(
@@ -42,14 +47,15 @@ def persist_tracked(
     """Persist an operator-internal frame and register it for
     :func:`release_operator_caches`. Use ONLY for frames referenced by
     the operator's returned plan (no in-function release point)."""
-    while len(_TRACKED) >= _MAX_TRACKED:
-        old = _TRACKED.pop(0)
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-    out = df.persist(level)
-    _TRACKED.append(out)
+    with _LOCK:
+        while len(_TRACKED) >= _MAX_TRACKED:
+            old = _TRACKED.pop(0)
+            try:
+                old.unpersist()
+            except Exception:
+                pass
+        out = df.persist(level)
+        _TRACKED.append(out)
     return out
 
 
@@ -58,13 +64,14 @@ def release_operator_caches() -> int:
     many were released. Safe at any time — plans over a released cache
     recompute instead of failing."""
     n = 0
-    while _TRACKED:
-        df = _TRACKED.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass  # session already stopped
+    with _LOCK:
+        while _TRACKED:
+            df = _TRACKED.pop()
+            try:
+                df.unpersist()
+                n += 1
+            except Exception:
+                pass  # session already stopped
     return n
 
 

@@ -130,12 +130,18 @@ class JvmFS:
 
     @classmethod
     def for_path(cls, path: str) -> "JvmFS":
+        from pyspark.errors import PySparkRuntimeError
         from pyspark.sql import SparkSession
 
-        spark = SparkSession.getActiveSession()
-        if spark is None:
+        # active() falls back to the default session: threads the JVM
+        # never made a session active on (replication stream workers,
+        # pipeline groups) resolve through it
+        try:
+            spark = SparkSession.active()
+        except PySparkRuntimeError:
             raise RuntimeError(
-                f"no active SparkSession to resolve filesystem for {path!r}")
+                f"no active SparkSession to resolve filesystem for {path!r}"
+            ) from None
         jvm = spark.sparkContext._jvm
         conf = spark.sparkContext._jsc.hadoopConfiguration()
         jpath = jvm.org.apache.hadoop.fs.Path(path)

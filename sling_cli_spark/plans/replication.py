@@ -4,8 +4,10 @@ Re-expresses the reference's replication lifecycle
 (``core/sling/replication.go:1117-1354`` UnmarshalReplication/Compile,
 ``:293-518`` wildcard expansion, ``:1503-1594`` stream ordering) as a
 driver-side loop that builds one ``Config`` per stream and executes them
-sequentially with ``runner.run``. Each stream's DataFrame plan is still
-fully distributed — the loop only sequences job submission.
+with ``runner.run`` through a bounded thread pool (one at a time when
+stream order is observable — see :func:`run_replication`). Each
+stream's DataFrame plan is still fully distributed — the pool only
+overlaps job submission.
 
 YAML shape (same surface as the reference):
 
@@ -26,9 +28,14 @@ YAML shape (same surface as the reference):
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import glob as _glob
 import os
 import re
+import threading
+import time
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -294,14 +301,110 @@ def _local_conn_base(name: str | None, env: dict) -> str | None:
     return None
 
 
+class _InlinePool:
+    """Width-1 stand-in for the stream pool: ``submit`` runs the stream
+    on the calling thread before it returns."""
+
+    def submit(self, fn, *args) -> Future:
+        fut: Future = Future()
+        try:
+            fut.set_result(fn(*args))
+        except Exception as e:
+            fut.set_exception(e)
+        return fut
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        return False
+
+
+class _StreamPool(ThreadPoolExecutor):
+    """Bounded stream pool. Each submission captures the calling
+    thread's Spark local properties and tags (job group, scheduler pool)
+    and reapplies them on the worker, so every stream's jobs carry
+    them. The JVM-side active session is not among them, so a worker
+    has none (see ``fsio.JvmFS.for_path``)."""
+
+    def __init__(self, spark, width: int):
+        super().__init__(max_workers=width,
+                         thread_name_prefix="sling-stream")
+        self._spark = spark
+
+    def submit(self, fn, *args) -> Future:
+        from pyspark.util import inheritable_thread_target
+
+        return super().submit(inheritable_thread_target(self._spark)(fn),
+                              *args)
+
+
+def _fanout_width(spark, rc: ReplicationConfig, compiled: list[Config],
+                  shared_db) -> int:
+    """How many compiled streams run at once (see run_replication)."""
+    if len(compiled) < 2 or rc.atomic or rc.env.get("SLING_STATE") \
+            or any((rc.hooks or {}).values()) \
+            or any(getattr(c, "_stream_hooks", None) for c in compiled):
+        return 1
+    objects = set()
+    for cfg in compiled:
+        src, tgt = cfg.source.conn or "", cfg.target.conn or ""
+        if cfg.source.is_sql or src.startswith(
+                ("duckdb:", "sqlite:", "jdbc:", "api:")) \
+                or tgt.startswith("sqlite:") \
+                or (tgt.startswith("duckdb:") and shared_db(cfg) is not None) \
+                or (tgt, cfg.target.object) in objects:
+            return 1
+        objects.add((tgt, cfg.target.object))
+    return min(len(compiled), spark.sparkContext.defaultParallelism,
+               os.cpu_count() or 1)
+
+
 def run_replication(spark, rc: ReplicationConfig, base_output: str = "",
                     connections=None, runtime=None,
                     continue_on_error: bool = False):
     """Execute every compiled stream; returns {stream: TaskResult}.
 
-    Sequential like the reference's default (it parallelizes with a
-    worker-pool limit; on Spark, per-stream parallelism already comes from
-    the cluster, and sequential submission keeps memory bounded).
+    Fan-out: the compiled streams go through ONE bounded thread pool
+    (the reference's pool mode; each stream's DataFrame plan is still
+    fully distributed, the pool overlaps their driver-side fixed costs
+    and small jobs). Its width is ``min(len(streams),
+    sc.defaultParallelism, os.cpu_count())``: more concurrent streams
+    than task slots only queue on the scheduler, and much of a stream's
+    work stays on the driver (inference, Delta log handling, a DuckDB
+    ingest, DB-load staging copies), which does not grow with the
+    executors a cluster adds. The width drops to 1 — every stream
+    then runs inline on the calling thread, in order — whenever stream
+    order can be observed:
+
+    - replication or per-stream hooks exist: ``pre``/``post`` fire
+      around each stream in order and read ``{run.*}`` as the CURRENT
+      stream's run;
+    - ``atomic``: the open ``CatalogTransaction`` is process-global
+      (``iceberg_catalog._ACTIVE_TXN``), not per thread;
+    - any stream reads an API or DB source (or SQL): API queues link
+      producer and consumer streams, and DB sources export through
+      one handle;
+    - the target is SQLite: one writer per file, and its connections
+      are bound to the thread that opened them;
+    - the DB handle is shared through ``connections``: one DuckDB
+      connection is not safe for concurrent use;
+    - ``SLING_STATE`` is set: the watermark store is one shared table;
+    - two streams write the same object: the later write must win.
+
+    Bookkeeping stays in stream order at any width: the ``{runs.*}``
+    entries are created in order before each submit (their
+    ``start_time`` is reset when the stream actually starts), and
+    ``results`` plus the ``execution.status`` counters fill in order as
+    streams are settled. Fail-fast (the default): once a stream fails no
+    further stream starts (a queued one drops its ``{runs.*}`` entry,
+    as if never reached), in-flight streams finish, then the first
+    failure in stream order is raised. With ``continue_on_error`` every
+    failure is recorded into ``execution.status.error`` and the run
+    proceeds (the reference's loop keeps going so end hooks can assert
+    on the failure). An interrupt (Ctrl-C) on the calling thread
+    likewise starts no further stream; in-flight streams finish before
+    it propagates.
 
     Replication-level hooks (reference: HookMap, ``hooks.go:49-56`` +
     ``replication.go:518-560``): ``start`` runs before the first stream,
@@ -315,11 +418,12 @@ def run_replication(spark, rc: ReplicationConfig, base_output: str = "",
 
     DB-conn targets (``duckdb:``) route through the DB-load lifecycle
     (``sinks.db_load.run_db``) — the handle comes from ``connections``
-    (registered under the conn name or URL) or opens fresh. With
-    ``continue_on_error`` a failed stream records into
-    ``execution.status.error`` and the run proceeds (the reference's
-    replication loop keeps going so end hooks can assert on the
-    failure); default is fail-fast.
+    (registered under the conn name or URL) or opens fresh per stream.
+
+    ``atomic: true`` defers every stream's catalog pointer commit to ONE
+    commit_many at the end (all streams land or none; always
+    fail-fast); its per-stream ``post`` hooks fire only after that
+    commit lands.
     """
     from sling_cli_spark.plans.pipeline import PipelineRuntime, run_pipeline
     from sling_cli_spark.runner import run
@@ -339,8 +443,6 @@ def run_replication(spark, rc: ReplicationConfig, base_output: str = "",
     runs_ns = rt.state_extra.setdefault("runs", {})
 
     def _run_entry(cfg):
-        import re as _re
-        import time
         import uuid
 
         from sling_cli_spark.dialects import get_dialect, parse_table_name
@@ -350,7 +452,7 @@ def run_replication(spark, rc: ReplicationConfig, base_output: str = "",
             or cfg.source.stream or ""
         sp = parse_table_name(stream_name, d.name)
         op = parse_table_name(cfg.target.object or "", d.name)
-        key = _re.sub(r"\W", "_", stream_name).strip("_")
+        key = re.sub(r"\W", "_", stream_name).strip("_")
         entry = {
             "id": uuid.uuid4().hex,
             "stream": {"name": stream_name,
@@ -368,11 +470,9 @@ def run_replication(spark, rc: ReplicationConfig, base_output: str = "",
             "duration": None, "error": None,
         }
         runs_ns[key] = entry
-        return entry
+        return key, entry
 
     def _finish_entry(entry, result=None, error=None):
-        import time
-
         entry["end_time"] = time.time()
         entry["duration"] = round(entry["end_time"] - entry["start_time"], 6)
         if error is not None:
@@ -386,12 +486,15 @@ def run_replication(spark, rc: ReplicationConfig, base_output: str = "",
             # (r.57: `!is_null(run.incremental_value)`)
             entry["incremental_value"] = result.watermark
 
+    def _shared_db(cfg):
+        return (rt.connections.get(cfg.target.conn)
+                or rt.connections.get((rc.target or "").lower()))
+
     def _run_stream(cfg):
         if (cfg.target.conn or "").startswith(("duckdb:", "sqlite:")):
             from sling_cli_spark.sinks.db_load import open_db, run_db
 
-            db = (rt.connections.get(cfg.target.conn)
-                  or rt.connections.get((rc.target or "").lower()))
+            db = _shared_db(cfg)
             own = db is None
             if own:
                 db = open_db(cfg.target.conn)
@@ -513,6 +616,7 @@ def run_replication(spark, rc: ReplicationConfig, base_output: str = "",
             if own_src:
                 src_db.close()
     compiled = list(compile_replication(rc))
+    txn = contextlib.nullcontext()
     if rc.atomic:
         # atomic replications defer every stream's catalog pointer
         # commit to ONE commit_many (iceberg_catalog.CatalogTransaction
@@ -529,61 +633,101 @@ def run_replication(spark, rc: ReplicationConfig, base_output: str = "",
             raise ValueError(
                 f"atomic replication needs catalog:// targets for "
                 f"every stream; got {bad[:3]}")
-        # per-stream 'post' hooks report COMMITTED state, so they fire
-        # only after the transaction's single commit_many lands (r11
-        # advice fix: they used to fire inside the with-block, claiming
-        # success for streams whose pointer never moved if the final
-        # atomic commit then failed)
-        post_envs = []
-        with CatalogTransaction():
-            for cfg in compiled:
-                stream_env = {
-                    "stream_name": cfg.source.stream or "",
-                    "object_name": cfg.target.object or ""}
-                run_hooks("pre", stream_env)
-                result = run(spark, cfg)
-                results[cfg.source.stream] = result
-                post_envs.append({**stream_env,
-                                  "rows": str(result.rows)})
-        for env in post_envs:
-            run_hooks("post", env)
-        run_hooks("end")
-        return results
+        txn = CatalogTransaction()
+        continue_on_error = False
     for cfg in compiled:
         if base_output and not os.path.isabs(cfg.target.object or "") \
                 and "://" not in (cfg.target.object or "") \
                 and not (cfg.target.conn or "").startswith(
                     ("duckdb:", "sqlite:")):
             cfg.target.object = os.path.join(base_output, cfg.target.object)
-        stream_env = {"stream_name": cfg.source.stream or "",
-                      "object_name": cfg.target.object or ""}
-        stream_hooks = getattr(cfg, "_stream_hooks", None) or {}
-        run_hooks("pre", stream_env)
-        if stream_hooks.get("pre"):
-            run_pipeline(spark, stream_hooks["pre"],
-                         env={**rc.env, **stream_env}, runtime=rt)
-        entry = _run_entry(cfg)
-        # `{run.*}` visible to pre/merge hooks DURING the stream
-        rt.state_extra["run"] = entry
+    width = _fanout_width(spark, rc, compiled, _shared_db)
+    failed = threading.Event()
+
+    def _stream_task(cfg, key, entry):
+        if failed.is_set():
+            # fail-fast: never started (it may precede the failed stream
+            # in stream order when that one started and failed first)
+            del runs_ns[key]
+            return None
+        entry["start_time"] = time.time()
         try:
             result = _run_stream(cfg)
         except Exception as e:
+            if not continue_on_error:
+                failed.set()
             _finish_entry(entry, error=e)
+            raise
+        _finish_entry(entry, result=result)
+        return result
+
+    # per-stream 'post' hooks of an atomic replication report COMMITTED
+    # state, so they wait for the transaction's single commit_many (r11
+    # advice fix: inside the with-block they claimed success for
+    # streams whose pointer never moved if the final commit failed)
+    deferred_posts = []
+
+    def _post_hooks(cfg, stream_env, result):
+        env = {**stream_env, "rows": str(result.rows)}
+        stream_post = (getattr(cfg, "_stream_hooks", None) or {}).get("post")
+        if stream_post:
+            run_pipeline(spark, stream_post, env={**rc.env, **env},
+                         runtime=rt)
+        run_hooks("post", env)
+
+    def _settle(cfg, stream_env, entry, fut):
+        """Record one stream's outcome; called in stream order."""
+        try:
+            result = fut.result()
+        except Exception as e:
             status["error"] += 1
             status.setdefault("failures", []).append(
                 f"{cfg.source.stream}: {e!r}")
             if not continue_on_error:
                 raise
             results[cfg.source.stream] = None
-            continue
-        _finish_entry(entry, result=result)
+            return
+        if result is None:  # skipped after a failure
+            return
         rt.state_extra["run"] = entry  # `{run.*}` = CURRENT stream's run
         status["success"] += 1
         results[cfg.source.stream] = result
-        if stream_hooks.get("post"):
-            run_pipeline(spark, stream_hooks["post"],
-                         env={**rc.env, **stream_env,
-                              "rows": str(result.rows)}, runtime=rt)
-        run_hooks("post", {**stream_env, "rows": str(result.rows)})
+        post = functools.partial(_post_hooks, cfg, stream_env, result)
+        if rc.atomic:
+            deferred_posts.append(post)
+        else:
+            post()
+
+    pool = _InlinePool() if width == 1 else _StreamPool(spark, width)
+    with txn, pool:
+        pending = []
+        try:
+            for cfg in compiled:
+                stream_env = {"stream_name": cfg.source.stream or "",
+                              "object_name": cfg.target.object or ""}
+                run_hooks("pre", stream_env)
+                stream_pre = (getattr(cfg, "_stream_hooks", None)
+                              or {}).get("pre")
+                if stream_pre:
+                    run_pipeline(spark, stream_pre,
+                                 env={**rc.env, **stream_env}, runtime=rt)
+                key, entry = _run_entry(cfg)
+                # `{run.*}` visible to pre/merge hooks DURING the stream
+                rt.state_extra["run"] = entry
+                pending.append((cfg, stream_env, entry,
+                                pool.submit(_stream_task, cfg, key, entry)))
+                if width == 1:
+                    # the stream already ran inline: settle it (and fire
+                    # its post hooks) before the next stream's pre hooks
+                    _settle(*pending.pop())
+            for p in pending:
+                _settle(*p)
+        except BaseException:
+            # a failure, or an interrupt (Ctrl-C) reaching this thread:
+            # queued streams must not start while the pool drains
+            failed.set()
+            raise
+    for post in deferred_posts:
+        post()
     run_hooks("end")
     return results

@@ -375,14 +375,10 @@ def run(
     The write action happens inside, so any DB-source staging dirs the
     read plan created are released on exit (sinks/db_load contract).
     """
-    from sling_cli_spark.sinks.db_load import (
-        dbsrc_stage_mark, release_db_source_stages)
+    from sling_cli_spark.sinks.db_load import db_source_stages
 
-    mark = dbsrc_stage_mark()
-    try:
+    with db_source_stages():
         return _run_impl(spark, cfg, target_df, backfill_range)
-    finally:
-        release_db_source_stages(mark)
 
 
 def _run_impl(
@@ -764,16 +760,10 @@ def _run_with_watermark(
     Observation — one materialization, no second source scan. The
     write happens inside, so DB-source staging dirs are released on
     exit (sinks/db_load contract)."""
-    from pyspark.sql import Observation
+    from sling_cli_spark.sinks.db_load import db_source_stages
 
-    from sling_cli_spark.sinks.db_load import (
-        dbsrc_stage_mark, release_db_source_stages)
-
-    mark = dbsrc_stage_mark()
-    try:
+    with db_source_stages():
         return _watermark_write(spark, cfg, watermark)
-    finally:
-        release_db_source_stages(mark)
 
 
 def _watermark_write(spark, cfg, watermark) -> TaskResult:

@@ -49,6 +49,8 @@ import os
 import re
 import shutil
 import tempfile
+from contextlib import contextmanager
+from contextvars import ContextVar
 from datetime import datetime, timezone
 
 from pyspark.sql import SparkSession
@@ -417,25 +419,38 @@ def open_duckdb(conn: str) -> DuckDBTarget:
 # --- DB-source staging-dir lifecycle (ADVICE r12) -------------------------
 # Each read_db_source export stages under the OS temp root; the returned
 # scan reads it LAZILY, so the dir must outlive the call. Callers that
-# own the consuming action (run / run_db / the CLI) take a mark before
-# building the plan and release after the action; an atexit backstop
-# reaps whatever a lazy caller (e.g. a registered query the driver
-# collects itself) leaves behind at interpreter exit.
+# own the consuming action (run / run_db / the CLI) build the plan and
+# run the action inside a db_source_stages() scope: the exports made in
+# it land in the scope's OWN list, removed when the scope exits. The
+# scope lives in a contextvar, so calls overlapping on other threads
+# (replication streams, pipeline groups with concurrency > 1) never
+# remove each other's stages. Exports made outside any scope (a lazy
+# caller, e.g. a registered query the driver collects itself) go to
+# _DBSRC_STAGES, reaped at interpreter exit.
 _DBSRC_STAGES: list[str] = []
+_STAGE_SCOPE: ContextVar[list[str] | None] = ContextVar(
+    "sling_dbsrc_stage_scope", default=None)
 
 
-def dbsrc_stage_mark() -> int:
-    """Marker for :func:`release_db_source_stages` — stages created
-    after this mark belong to the caller's plan."""
-    return len(_DBSRC_STAGES)
-
-
-def release_db_source_stages(mark: int = 0) -> None:
-    """Remove every DB-source staging dir created after ``mark``.
-
-    Call ONLY after the consuming action (write/collect) has run — the
+@contextmanager
+def db_source_stages():
+    """Scope whose DB-source staging dirs are removed on exit. Exit it
+    ONLY after the consuming action (write/collect) has run — the
     staged parquet backs a lazy scan until then."""
-    while len(_DBSRC_STAGES) > mark:
+    stages: list[str] = []
+    token = _STAGE_SCOPE.set(stages)
+    try:
+        yield stages
+    finally:
+        _STAGE_SCOPE.reset(token)
+        for stage in stages:
+            shutil.rmtree(stage, ignore_errors=True)
+
+
+def release_db_source_stages() -> None:
+    """Remove every unscoped DB-source staging dir (same caveat as
+    :func:`db_source_stages`)."""
+    while _DBSRC_STAGES:
         shutil.rmtree(_DBSRC_STAGES.pop(), ignore_errors=True)
 
 
@@ -616,11 +631,12 @@ def read_db_source(spark: SparkSession, source, skip_filters=None,
     sql, where_pushed, parsed = _render_db_source_sql(
         source, d, skip_filters)
     # staged under the OS temp root; the scan reads it lazily so the
-    # files must outlive this call — tracked in _DBSRC_STAGES and
-    # released by the consuming action's mark (or atexit), so a
+    # files must outlive this call — tracked by the consuming action's
+    # db_source_stages() scope (or _DBSRC_STAGES + atexit), so a
     # long-lived session never accumulates unbounded export copies
     stage = tempfile.mkdtemp(prefix="sling_dbsrc_")
-    _DBSRC_STAGES.append(stage)
+    scope = _STAGE_SCOPE.get()
+    (_DBSRC_STAGES if scope is None else scope).append(stage)
     path = os.path.join(stage, "src.parquet")
     hint = {} if parsed["sql"] else {"table_hint": parsed["name"]}
     uk = source.update_key
@@ -850,13 +866,10 @@ def run_db(spark: SparkSession, cfg: Config, db,
 
     Owns the consuming actions for every plan it builds, so DB-source
     staging dirs created during the run are released on exit."""
-    mark = dbsrc_stage_mark()
-    try:
+    with db_source_stages():
         return _run_db_impl(spark, cfg, db, merge_hooks=merge_hooks,
                             watermark_override=watermark_override,
                             want_new_watermark=want_new_watermark)
-    finally:
-        release_db_source_stages(mark)
 
 
 def _run_db_impl(spark: SparkSession, cfg: Config, db,

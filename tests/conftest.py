@@ -34,3 +34,22 @@ def orders(spark, sf_dir):
 @pytest.fixture(scope="session")
 def documents(spark, sf_dir):
     return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+
+
+@pytest.fixture
+def dbsrc_stages(monkeypatch):
+    """Records every DB-source staging dir (``read_db_source`` export)
+    created during the test, in creation order."""
+    import tempfile
+
+    made = []
+    real = tempfile.mkdtemp
+
+    def recording_mkdtemp(*a, **kw):
+        path = real(*a, **kw)
+        if kw.get("prefix") == "sling_dbsrc_":
+            made.append(path)
+        return path
+
+    monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
+    return made

@@ -105,9 +105,10 @@ def test_snapshot_with_pk_appends(spark, tmp_path, sf_dir):
     db.close()
 
 
-def test_dbsrc_stage_released_after_run_db(spark, tmp_path):
+def test_dbsrc_stage_released_after_run_db(spark, tmp_path, dbsrc_stages):
     import duckdb
 
+    from sling_cli_spark.runner import run
     from sling_cli_spark.sinks import db_load as dbl
 
     dbfile = str(tmp_path / "src.duckdb")
@@ -115,22 +116,37 @@ def test_dbsrc_stage_released_after_run_db(spark, tmp_path):
     con.execute("create table t as select range as id from range(10)")
     con.close()
 
-    before = dbl.dbsrc_stage_mark()
     tgt = str(tmp_path / "out.parquet")
     cfg = Config.from_dict({
         "source": {"conn": f"duckdb://{dbfile}", "stream": "t"},
         "target": {"object": tgt},
         "mode": "full-refresh",
     })
-    from sling_cli_spark.runner import run
-
     res = run(spark, cfg)
     assert res.rows == 10
-    assert dbl.dbsrc_stage_mark() == before, \
+    assert len(dbsrc_stages) == 1
+    assert not os.path.exists(dbsrc_stages[0]), \
         "run() must release the DB-source staging dirs it created"
 
+    cfg = Config.from_dict({
+        "source": {"conn": f"duckdb://{dbfile}", "stream": "t"},
+        "target": {"conn": f"duckdb://{tmp_path}/tgt.duckdb",
+                   "object": "main.t"},
+        "mode": "full-refresh",
+    })
+    db = dbl.open_db(cfg.target.conn)
+    try:
+        res = dbl.run_db(spark, cfg, db)
+    finally:
+        db.close()
+    assert res.rows == 10
+    assert len(dbsrc_stages) == 2
+    assert not os.path.exists(dbsrc_stages[1]), \
+        "run_db() must release the DB-source staging dirs it created"
+    assert dbl._DBSRC_STAGES == []
 
-def test_db_source_is_empty_probe(tmp_path):
+
+def test_db_source_is_empty_probe(tmp_path, dbsrc_stages):
     import duckdb
 
     from sling_cli_spark.config import Source
@@ -142,7 +158,6 @@ def test_db_source_is_empty_probe(tmp_path):
     con.execute("create table empty_t (id int)")
     con.close()
 
-    mark = dbl.dbsrc_stage_mark()
     assert dbl.db_source_is_empty(
         None, Source(conn=f"duckdb://{dbfile}", stream="empty_t")) is True
     assert dbl.db_source_is_empty(
@@ -151,8 +166,7 @@ def test_db_source_is_empty_probe(tmp_path):
     assert dbl.db_source_is_empty(
         None, Source(conn=f"duckdb://{dbfile}", stream="full_t",
                      where="id > 100")) is True
-    assert dbl.dbsrc_stage_mark() == mark, \
-        "the probe must not stage an export"
+    assert dbsrc_stages == [], "the probe must not stage an export"
 
 
 def test_quote_table_renders_qualified():
@@ -261,16 +275,15 @@ def test_chunked_export_parallel_files(spark, tmp_path):
 
     db = dbl.DuckDBTarget(f"{tmp_path}/s.db")
     db.execute("create table t as select range as id from range(1, 401)")
-    mark = dbl.dbsrc_stage_mark()
-    df = dbl.read_db_source(
-        spark, Source(conn=f"duckdb://{tmp_path}/s.db", stream="t",
-                      update_key="id",
-                      options=__import__(
-                          "sling_cli_spark.config",
-                          fromlist=["SourceOptions"]).SourceOptions(
-                              chunk_size=100)), db=db)
-    assert df.count() == 400
-    stage = dbl._DBSRC_STAGES[mark]
-    assert len(glob.glob(f"{stage}/chunk_*.parquet")) >= 4
-    dbl.release_db_source_stages(mark)
+    with dbl.db_source_stages() as stages:
+        df = dbl.read_db_source(
+            spark, Source(conn=f"duckdb://{tmp_path}/s.db", stream="t",
+                          update_key="id",
+                          options=__import__(
+                              "sling_cli_spark.config",
+                              fromlist=["SourceOptions"]).SourceOptions(
+                                  chunk_size=100)), db=db)
+        assert df.count() == 400
+        assert len(glob.glob(f"{stages[0]}/chunk_*.parquet")) >= 4
+    assert not os.path.exists(stages[0])
     db.close()
